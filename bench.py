@@ -638,19 +638,31 @@ def _recheck_missed_pins(pin_report: dict) -> dict:
             capture_output=True, text=True,
             timeout=300 + 240 * len(missed),
         )
+        malformed = []
         for line in proc.stdout.splitlines():
             line = line.strip()
             if not line.startswith("{"):
                 continue
-            rec = json.loads(line)
-            name = rec.pop("entry")
-            rec["pin"] = PINS[name]
-            rec["hit"] = rec["warm_median"] <= PINS[name]
+            # A stray line must not lose the whole artifact at this, the
+            # final, stage: skip it and record it instead.
+            try:
+                rec = json.loads(line)
+                name = rec.pop("entry")
+                rec["pin"] = PINS[name]
+                rec["hit"] = rec["warm_median"] <= PINS[name]
+            except (KeyError, TypeError, ValueError):
+                malformed.append(line[:200])
+                continue
             out[name] = rec
         for name in missed:
             if name not in out:
                 tail = (proc.stderr or "")[-300:]
                 out[name] = {"error": f"no recheck result (rc={proc.returncode}): {tail}"}
+        if malformed:
+            out["malformed_lines"] = {
+                "error": f"{len(malformed)} unparsable isobench line(s)",
+                "lines": malformed,
+            }
     except (OSError, subprocess.TimeoutExpired, ValueError) as e:
         for name in missed:
             out.setdefault(name, {"error": f"{type(e).__name__}: {e}"})

@@ -76,6 +76,7 @@ from typing import Any
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..functions.grouped import grouped_map_batched, nullify
 from ..plans.dialect import rewrite_query
 from ..protocol.model import InvalidQueryError
 from .base import (
@@ -910,7 +911,6 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
             StructField(KIND_COL, LongType()),
         ]
     )
-    out_names = [f.name for f in out_schema.fields]
     elements = spec["elements"]
     measures = spec["measures"]
     n_elem = len(elements)
@@ -979,17 +979,10 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
 
         batch_cols: dict[str, list] = {}
 
-        def _nullify(x):
-            if x is None or x is pd.NaT:
-                return None
-            if isinstance(x, float) and x != x:
-                return None
-            return x
-
         def batch_col(c):
             v = batch_cols.get(c)
             if v is None:
-                v = [_nullify(x) for x in pdf[c].tolist()]
+                v = [nullify(x) for x in pdf[c].tolist()]
                 batch_cols[c] = v
             return v
 
@@ -1007,10 +1000,9 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         within_ns, preds_b, mrctx_b, mrdone_b, mrcount_b, batch_col,
     ):
         n = ge - gs
-        # Defensive order check, same rule as the old per-key fold: only
-        # physically reorder when the slice isn't already (ts, seq)-sorted
-        # (it always is when fed by grouped_map_batched; the no-keys path
-        # passes one unsorted global group).
+        # grouped_map_batched delivers the run (ts, seq)-sorted with null
+        # times FIRST (Spark's ascending default); the fold's order puts
+        # NaT LAST (numpy lexsort), so reorder only when the run has one.
         order = None
         if n > 1:
             lex = np.lexsort((seq_b[gs:ge], ts_dt_b[gs:ge]))
@@ -1087,12 +1079,22 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         final = process_all
         att = {"n": n_proc, "final": final}
 
+        # NaT views as int64-min but sorts LAST, so only the non-NaT prefix
+        # is ascending and binary-searchable.
+        n_timed = n - int((ts_ns_g == _NAT_NS).sum())
+
         def set_attempt(s0):
             if within_ns is None:
                 return
+            if s0 >= n_timed:
+                # A null start time has no window end (NaT + WITHIN is
+                # NaT): the attempt is bounded as if WITHIN were absent.
+                att["n"], att["final"] = n_proc, final
+                return
             wlimit_ns = ts_ns_g[s0] + within_ns
             att["n"] = min(
-                n_proc, int(np.searchsorted(ts_ns_g, wlimit_ns, side="right"))
+                n_proc,
+                int(np.searchsorted(ts_ns_g[:n_timed], wlimit_ns, "right")),
             )
             att["final"] = final or (wm_ns is not None and wm_ns >= wlimit_ns)
 
@@ -1279,30 +1281,20 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
                         _emit(rec, d, kind=2)
         return out
 
-    if keys:
-        # Batch-amortized grouped map: at user_id-grade key cardinality a
-        # per-key applyInPandas pays ~0.5 ms of framework overhead per key
-        # (one Arrow round-trip each); the mapInPandas run-splitter folds
-        # thousands of contiguous key groups per Arrow batch instead.
-        from ..functions.grouped import grouped_map_batched
-
-        return grouped_map_batched(
-            with_preds,
-            keys,
-            None,
-            out_schema,
-            sort_cols=[time_col, SEQ_INPUT],
-            batch_fold=fold_batch,
-        )
-
-    def fold(pdf):
-        import pandas as pd
-
-        # One global group spanning the whole frame (and unsorted input:
-        # _fold_group's order check handles the physical sort).
-        return pd.DataFrame(fold_batch(pdf, [0]), columns=out_names)
-
-    return with_preds.groupBy(F.lit(0).alias("__gk")).applyInPandas(fold, out_schema)
+    # Batch-amortized grouped map: at user_id-grade key cardinality a
+    # per-key applyInPandas pays ~0.5 ms of framework overhead per key
+    # (one Arrow round-trip each); the mapInPandas run-splitter folds
+    # thousands of contiguous key groups per Arrow batch instead. A
+    # key-less pattern is one group on a constant key.
+    if not keys:
+        with_preds = with_preds.withColumn("__gk", F.lit(0))
+    return grouped_map_batched(
+        with_preds,
+        keys or ["__gk"],
+        fold_batch,
+        out_schema,
+        sort_cols=[time_col, SEQ_INPUT],
+    )
 
 
 def match_recognize_batch(spark, df, sql: str):

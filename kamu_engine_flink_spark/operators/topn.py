@@ -13,8 +13,8 @@ no records can touch a Top-N: a distributed prefilter keeps only rows that
 beat the current N-th entry (threshold is monotone within a batch, so
 filtering against the previous state is exact), then a partition-local
 running-top-N prune bounds survivors to ~N*ln(rows/partition) per
-partition. The survivors fold through ONE distributed `applyInPandas`
-group (the same machinery as the keyed variant, keyed by a constant) —
+partition. The survivors fold as ONE group of the batched grouped fold
+(the same machinery as the keyed variant, keyed by a constant) —
 no data row ever materializes on the driver; the only driver-side values
 are the single N-th-place threshold row. State is the <=N-row ranking
 table.
@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..functions.grouped import grouped_map_batched, nullify
 from ..plans.classify import parse_topn
 from ..plans.dialect import rewrite_query
 from ..protocol.model import OP_APPEND, OP_CORRECT_FROM, OP_CORRECT_TO, InvalidQueryError
@@ -244,8 +245,8 @@ def fold_records(ranking, rows, order, limit):
     (gseq, sub, op, place, row) — gseq is the triggering row's ledger
     offset, sub orders one record's corrections (ascending place, op 2
     before 3). `order` is the composite [(col, descending), ...] rank
-    order (beats_key semantics). Shared by the global driver fold and the
-    per-key distributed fold (keyed_topn.py)."""
+    order (beats_key semantics). The sequential kernel of the global and
+    keyed batch folds (make_fold_batch)."""
     order_cols_ = [c for c, _ in order]
     if len(order_cols_) == 1:
         col0 = order_cols_[0]
@@ -302,118 +303,101 @@ def fold_records(ranking, rows, order, limit):
         del ranking[limit:]  # beyond-N tail can never resurface
 
 
-def make_fold_group(value_cols, rank_col, order, limit):
-    """Build the applyInPandas group fold shared by the global and keyed
-    Top-N executors. The group pdf is the union of (previous state rows —
-    rank_col set) and (slice rows — rank_col null, ordered by SEQ_INPUT);
-    the fold replays the slice through the running ranking and returns
-    changelog records (KIND 0, ordered by GSEQ/SUB) plus the group's new
-    ranking (KIND 1). `order` is the composite [(col, descending), ...]
-    rank order."""
+def make_fold_batch(value_cols, rank_col, order, limit):
+    """Build the batch fold (`grouped_map_batched`'s contract) shared by
+    the global and keyed Top-N executors. Each key run of the chunk is the
+    union of (previous state rows — rank_col set) and (slice rows —
+    rank_col null, ordered by SEQ_INPUT); the fold replays the slice
+    through the running ranking and returns changelog records (KIND 0,
+    ordered by GSEQ/SUB) plus the group's new ranking (KIND 1). `order` is
+    the composite [(col, descending), ...] rank order."""
     order_cols_ = [c for c, _ in order]
+    # Single-column fast path: scalar order keys and a direction-
+    # specialized compare — the admission prepass touches every slice row.
+    single = len(order) == 1
+    if single:
+        desc0 = order[0][1]
 
-    def fold_group(pdf) -> list[dict[str, Any]]:
-        # Hot path at high key cardinality: plain per-column Python lists
-        # instead of an astype(object) copy + iterrows (row-at-a-time
-        # pandas was the round-2 profile's top cost in this fold).
-        import pandas as pd
+        def _beats(v, ev):
+            # Identical semantics to beats_key (ties do not displace,
+            # DESC nulls last / ASC nulls first).
+            if v is None:
+                return (not desc0) and ev is not None
+            if ev is None:
+                return desc0
+            return (v > ev) if desc0 else (v < ev)
 
-        def _nullify(x):
-            if x is None or x is pd.NaT:
-                return None
-            if isinstance(x, float) and x != x:
-                return None
-            return x
+    else:
 
-        # Round-5 refinement: a row emits changelog iff it ENTERS the
-        # running top-N, which depends only on the ORDER-column sequence
-        # (fold_records admits a row iff it beats the running Nth value;
-        # non-entering rows never mutate the ranking). A scalar prepass
-        # over just (rank, seq, order) picks the entering rows, so the
-        # O(rows x cols) dict materialization runs on the survivors only
-        # — about N*H(rows/key) of rows/key under uniform arrival, a
-        # large constant-factor cut on big slices.
+        def _beats(v, ev):
+            return beats_key(v, ev, order)
+
+    def fold_batch(pdf, starts) -> list[dict[str, Any]]:
+        # Batch-level extraction, once per Arrow chunk: each key run below
+        # is an index range into these lists, never a pandas slice.
         n = len(pdf)
-        rank_v = [_nullify(x) for x in pdf[rank_col].tolist()]
-        seq_v = [_nullify(x) for x in pdf[SEQ_INPUT].tolist()]
+        rank_v = [nullify(x) for x in pdf[rank_col].tolist()]
+        seq_v = [nullify(x) for x in pdf[SEQ_INPUT].tolist()]
         ov_lists = [
-            [_nullify(x) for x in pdf[c].tolist()] for c in order_cols_
+            [nullify(x) for x in pdf[c].tolist()] for c in order_cols_
         ]
-        # Single-column fast path: scalar order keys and a direction-
-        # specialized compare — this prepass touches every slice row.
-        single = len(ov_lists) == 1
         order_v = ov_lists[0] if single else list(zip(*ov_lists))
-        state_idx = sorted(
-            (i for i in range(n) if rank_v[i] is not None),
-            key=lambda i: rank_v[i],
-        )
-        slice_idx = sorted(
-            (i for i in range(n) if rank_v[i] is None), key=lambda i: seq_v[i]
-        )
+        val_lists = [pdf[c].tolist() for c in value_cols]
 
-        if single:
-            desc0 = order[0][1]
+        def row_at(i):
+            return {c: nullify(v[i]) for c, v in zip(value_cols, val_lists)}
 
-            def _beats(v, ev):
-                # Identical semantics to beats_key (ties do not displace,
-                # DESC nulls last / ASC nulls first).
-                if v is None:
-                    return (not desc0) and ev is not None
-                if ev is None:
-                    return desc0
-                return (v > ev) if desc0 else (v < ev)
-
-        else:
-
-            def _beats(v, ev):
-                return beats_key(v, ev, order)
-
-        top_vals = [order_v[i] for i in state_idx[:limit]]
-        entering: list[int] = []
-        for i in slice_idx:
-            v = order_v[i]
-            if len(top_vals) >= limit and not _beats(v, top_vals[-1]):
-                continue
-            entering.append(i)
-            lo, hi = 0, len(top_vals)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                if _beats(v, top_vals[mid]):
-                    hi = mid
-                else:
-                    lo = mid + 1
-            top_vals.insert(lo, v)
-            del top_vals[limit:]
-
-        need_idx = state_idx + entering
-        sub_cols = {
-            c: [_nullify(x) for x in pdf[c].iloc[need_idx].tolist()]
-            for c in value_cols
-        }
-        m_state = len(state_idx)
-        ranking: list[dict[str, Any]] = [
-            {c: sub_cols[c][j] for c in value_cols} for j in range(m_state)
-        ]
-        rows = [
-            ({c: sub_cols[c][j] for c in value_cols}, seq_v[need_idx[j]])
-            for j in range(m_state, len(need_idx))
-        ]
         out: list[dict[str, Any]] = []
-        for gseq, sub, op, place, row in fold_records(
-            ranking, rows, order, limit
-        ):
-            out.append(
-                {**row, rank_col: place, OP_COL: op, GSEQ_COL: gseq,
-                 SUB_COL: sub, KIND_COL: 0}
+        bounds = [*starts, n]
+        for gs, ge in zip(bounds, bounds[1:]):
+            # Admission prepass: a row emits changelog iff it ENTERS the
+            # running top-N, which depends only on the ORDER-column
+            # sequence (fold_records admits a row iff it beats the running
+            # Nth value; non-entering rows never mutate the ranking). So
+            # the per-row dicts are built for the state and entering rows
+            # only — about N*H(rows/key) of rows/key under uniform arrival.
+            state_idx = sorted(
+                (i for i in range(gs, ge) if rank_v[i] is not None),
+                key=rank_v.__getitem__,
             )
-        for i, row in enumerate(ranking[:limit]):
-            out.append(
-                {**row, rank_col: i + 1, OP_COL: None, GSEQ_COL: None,
-                 SUB_COL: None, KIND_COL: 1}
+            slice_idx = sorted(
+                (i for i in range(gs, ge) if rank_v[i] is None),
+                key=seq_v.__getitem__,
             )
+            top_vals = [order_v[i] for i in state_idx[:limit]]
+            entering: list[int] = []
+            for i in slice_idx:
+                v = order_v[i]
+                if len(top_vals) >= limit and not _beats(v, top_vals[-1]):
+                    continue
+                entering.append(i)
+                lo, hi = 0, len(top_vals)
+                while lo < hi:
+                    mid = (lo + hi) // 2
+                    if _beats(v, top_vals[mid]):
+                        hi = mid
+                    else:
+                        lo = mid + 1
+                top_vals.insert(lo, v)
+                del top_vals[limit:]
+
+            ranking = [row_at(i) for i in state_idx]
+            rows = [(row_at(i), seq_v[i]) for i in entering]
+            for gseq, sub, op, place, row in fold_records(
+                ranking, rows, order, limit
+            ):
+                out.append(
+                    {**row, rank_col: place, OP_COL: op, GSEQ_COL: gseq,
+                     SUB_COL: sub, KIND_COL: 0}
+                )
+            for i, row in enumerate(ranking[:limit]):
+                out.append(
+                    {**row, rank_col: i + 1, OP_COL: None, GSEQ_COL: None,
+                     SUB_COL: None, KIND_COL: 1}
+                )
         return out
 
-    return fold_group
+    return fold_batch
 
 
 def execute_topn(ctx: StepContext, sql: str) -> StepResult:
@@ -513,7 +497,7 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     candidates = _prune_partition_local(candidates, order, spec.limit)
 
     # Distributed fold: the global changelog is inherently one sequential
-    # fold, so run it as ONE applyInPandas group (constant key) over
+    # fold, so run it as ONE grouped-fold group (constant key) over
     # (previous state ∪ pruned survivors) — the same machinery as the
     # keyed variant. No data row ever materializes on the driver; the
     # reference runs the whole job at parallelism 1 (SURVEY §3), so a
@@ -537,11 +521,9 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
             StructField(KIND_COL, IntegerType()),
         ]
     )
-    from ..functions.grouped import grouped_map_batched
-
-    fold_group = make_fold_group(value_cols, rank_col, order, spec.limit)
+    fold_batch = make_fold_batch(value_cols, rank_col, order, spec.limit)
     folded = ctx.pin(
-        grouped_map_batched(unioned, [GROUP_COL], fold_group, fold_schema)
+        grouped_map_batched(unioned, [GROUP_COL], fold_batch, fold_schema)
     )
     # Materialize the pin NOW: the deferred state save and the output write
     # later run as concurrent jobs, and Spark's cache races rather than

@@ -10,6 +10,7 @@ skew-join handling, vectorized reads.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -79,7 +80,9 @@ def engine_session(
 _WARNED_BAD_CONF: set[str] = set()
 
 
-def conf_int(spark: SparkSession, key: str, default: int) -> int:
+def conf_int(
+    spark: SparkSession, key: str, default: int | Callable[[], int]
+) -> int:
     """Session conf as int without the missing-key exception round trips.
 
     `spark.conf.get(key)` on an unset key raises in the JVM and PySpark's
@@ -89,13 +92,16 @@ def conf_int(spark: SparkSession, key: str, default: int) -> int:
     hot path, so the try/except-miss pattern was a fixed per-invocation
     driver cost. Unset or non-integer values fall back to `default`,
     matching the try/except sites this replaces; a set-but-unparsable
-    value additionally warns once per key."""
+    value additionally warns once per key. A callable `default` is called
+    only on fallback (a default that costs its own conf read)."""
     v = spark.conf.get(key, None)
     if v is None:
-        return default
+        return default() if callable(default) else default
     try:
         return int(v)
     except (TypeError, ValueError):
+        if callable(default):
+            default = default()
         if key not in _WARNED_BAD_CONF:
             _WARNED_BAD_CONF.add(key)
             import logging

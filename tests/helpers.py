@@ -10,6 +10,7 @@ point — same shape as the reference's functional tests
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -29,6 +30,22 @@ from kamu_engine_flink_spark.protocol.model import (
 
 def ts(day: int, hour: int = 0, minute: int = 0) -> datetime:
     return datetime(2000, 1, day, hour, minute, tzinfo=timezone.utc)
+
+
+@contextmanager
+def arrow_batch_size(spark, rows: int | None):
+    """Run the block with spark.sql.execution.arrow.maxRecordsPerBatch set
+    to `rows` (None keeps the session default), so pandas UDFs see small
+    Arrow batches and per-key runs straddle batch boundaries."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    if rows is None:
+        yield
+        return
+    spark.conf.set(key, str(rows))
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
 
 
 def write_input_slice(path: str, columns: dict[str, list], types: dict[str, pa.DataType]):

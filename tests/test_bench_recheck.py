@@ -93,3 +93,28 @@ def test_subprocess_timeout_reported(monkeypatch):
     monkeypatch.setattr(subprocess, "run", fake_run)
     out = bench._recheck_missed_pins(_report(dedup_minhash_fast=3.0))
     assert "TimeoutExpired" in out["dedup_minhash_fast"]["error"]
+
+
+def test_malformed_lines_skipped_and_recorded(monkeypatch):
+    """JSON lines without `entry` or `warm_median`, or naming an entry
+    that is not pinned, are recorded as errors instead of raising after
+    the whole suite has run."""
+
+    def fake_run(cmd, **kw):
+        lines = [
+            {"entry": "dedup_minhash_fast", "runs": [1.0], "warm_median": 1.0},
+            {"runs": [1.0], "warm_median": 1.0},
+            {"entry": "dedup_minhash_fast", "runs": [1.0]},
+            {"entry": "no_such_entry", "runs": [1.0], "warm_median": 1.0},
+        ]
+        out = "".join(json.dumps(x) + "\n" for x in lines)
+        return types.SimpleNamespace(stdout=out, stderr="", returncode=0)
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    out = bench._recheck_missed_pins(
+        _report(dedup_minhash_fast=3.0, stress_keyed_topn_x10_3inv=9.5)
+    )
+    assert out["dedup_minhash_fast"]["hit"] is True
+    assert "no recheck result" in out["stress_keyed_topn_x10_3inv"]["error"]
+    bad = out["malformed_lines"]
+    assert "3 unparsable" in bad["error"] and len(bad["lines"]) == 3

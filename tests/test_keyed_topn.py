@@ -11,10 +11,11 @@ order within a record, interleaved across keys by ledger-offset order.
 from datetime import timezone
 
 import pyarrow.parquet as pq
+import pytest
 
 from kamu_engine_flink_spark.protocol.model import DatasetVocabulary
 
-from .helpers import TransformRunner, ts
+from .helpers import TransformRunner, arrow_batch_size, ts
 from .test_topn import match_scores_slice
 
 KEYED_TOPN_QUERY = """select
@@ -124,37 +125,54 @@ def test_keyed_topn_changelog_and_resume(spark, tmp_path):
     ]
 
 
-def test_keyed_topn_randomized_vs_simulation(spark, tmp_path):
-    """2000 random rows over 20 keys through the distributed fold (with
-    the partition-local prune) must produce exactly the changelog of a
-    driver-side per-key simulation interleaved by ledger offset."""
+@pytest.mark.parametrize("batch", [None, 7], ids=["default", "batch7"])
+def test_keyed_topn_randomized_vs_simulation(spark, tmp_path, batch):
+    """Random rows over 20 keys through the distributed fold (with the
+    partition-local prune), then a resume slice over 30 keys, must produce
+    exactly the changelog of a driver-side per-key simulation interleaved
+    by ledger offset. A 7-row Arrow batch makes key runs straddle batch
+    boundaries; the resume folds keys holding state plus slice rows."""
     import random
 
     from kamu_engine_flink_spark.operators.topn import fold_records
 
     rng = random.Random(7)
-    n, limit = 2000, 2  # KEYED_TOPN_QUERY keeps place <= 2
-    rows = [
-        (i, 0, ts(5), ts(1, 0, 0), f"p{rng.randrange(20)}", rng.randrange(10_000))
-        for i in range(n)
-    ]
-    # Reference simulation: per-key running top-N, global order (seq, sub).
+    limit = 2  # KEYED_TOPN_QUERY keeps place <= 2
     rankings: dict = {}
-    expected = []
-    for seq, _op, _st, _et, player, score in rows:
-        row = {"match_time": ts(1, 0, 0), "player_name": player, "score": score}
-        ranking = rankings.setdefault(player, [])
-        for gseq, sub, op, place, r in fold_records(
-            ranking, [(row, seq)], [("score", True)], limit
-        ):
-            expected.append((op, place, r["player_name"], r["score"]))
+
+    def slice_rows(first, n, n_keys, day):
+        return [
+            (i, 0, ts(day), ts(1, 0, 0), f"p{rng.randrange(n_keys)}",
+             rng.randrange(10_000))
+            for i in range(first, first + n)
+        ]
+
+    def simulate(rows):
+        # Reference simulation: per-key running top-N, global order
+        # (seq, sub), carrying each key's ranking across invocations.
+        expected = []
+        for seq, _op, _st, _et, player, score in rows:
+            row = {"match_time": ts(1, 0, 0), "player_name": player,
+                   "score": score}
+            ranking = rankings.setdefault(player, [])
+            for gseq, sub, op, place, r in fold_records(
+                ranking, [(row, seq)], [("score", True)], limit
+            ):
+                expected.append((op, place, r["player_name"], r["score"]))
+        return expected
 
     runner = _runner(spark, tmp_path, KEYED_TOPN_QUERY)
-    s1 = str(tmp_path / "in" / "s1.parquet")
-    match_scores_slice(s1, rows)
-    resp, out = runner.run([_input(s1, ts(1, 0, 1))], system_time=ts(6))
-    got = [(r[1], r[2], r[4], r[5]) for r in _read_rows(out)]
-    assert got == expected
+    rows1 = slice_rows(0, 2000, 20, 5)
+    rows2 = slice_rows(2000, 600, 30, 6)
+    with arrow_batch_size(spark, batch):
+        for name, rows, day in (("s1", rows1, 6), ("s2", rows2, 7)):
+            path = str(tmp_path / "in" / f"{name}.parquet")
+            match_scores_slice(path, rows)
+            resp, out = runner.run(
+                [_input(path, ts(1, 0, 1))], system_time=ts(day)
+            )
+            got = [(r[1], r[2], r[4], r[5]) for r in _read_rows(out)]
+            assert got == simulate(rows), name
 
 
 def test_dedup_keep_last_changelog(spark, tmp_path):

@@ -413,6 +413,47 @@ MATCH_RECOGNIZE (
     assert [(r["dip"], r["spike"]) for r in rows] == [(7, 120)]
 
 
+def test_within_holds_with_null_event_times(spark):
+    """Null event times sort after every timed row, so WITHIN's window end
+    is searched over the timed rows only. With four null-time rows a
+    search over the whole group overshot the window end, and a spike 20
+    minutes after its dip matched under WITHIN 5 minutes."""
+    from datetime import datetime
+
+    from kamu_engine_flink_spark.operators.match_recognize import (
+        match_recognize_batch,
+    )
+
+    rows = [(0, 0, 5.0), (1, 10, 20.0), (2, 20, 150.0)] + [
+        (3 + i, None, 50.0) for i in range(4)
+    ]
+    df = spark.createDataFrame(
+        [
+            (1, None if m is None else datetime(2020, 1, 1, 0, m), s, x)
+            for s, m, x in rows
+        ],
+        "k int, ts timestamp, __seq long, x double",
+    )
+
+    def matches(within_minutes):
+        out = match_recognize_batch(
+            spark,
+            df,
+            f"""select * from t MATCH_RECOGNIZE (
+                 PARTITION BY k ORDER BY ts
+                 MEASURES A.x AS a_x, C.x AS c_x
+                 ONE ROW PER MATCH AFTER MATCH SKIP PAST LAST ROW
+                 PATTERN (A B* C) WITHIN INTERVAL '{within_minutes}' MINUTE
+                 DEFINE A AS A.x < 10, B AS B.x >= 10 AND B.x < 100,
+                        C AS C.x >= 100
+               )""",
+        )
+        return [(r["a_x"], r["c_x"]) for r in out.collect()]
+
+    assert matches(30) == [(5.0, 150.0)]
+    assert matches(5) == []
+
+
 def test_classifier_match_number_final(spark, tmp_path):
     """CLASSIFIER() / MATCH_NUMBER() / FINAL-mode measures; the match
     ordinal is a per-key counter persisted across invocations."""

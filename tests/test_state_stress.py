@@ -446,3 +446,39 @@ def test_append_only_state_compacts_past_file_bound(spark, tmp_path):
     finally:
         spark.conf.unset("spark.kamu.state.compactAfterFiles")
         spark.conf.unset("spark.kamu.state.numBuckets")
+
+
+def test_bucket_count_reads_shuffle_partitions_only_when_unset(tmp_path):
+    """A set spark.kamu.state.numBuckets is one conf read per bucketed
+    write; the shuffle partition count is read only as its fallback."""
+    import types
+
+    from kamu_engine_flink_spark.engine.state import StateStore
+
+    class CountingConf:
+        def __init__(self, values):
+            self.values = values
+            self.reads = []
+
+        def get(self, key, default=None):
+            self.reads.append(key)
+            return self.values.get(key, default)
+
+    conf = CountingConf(
+        {
+            "spark.kamu.state.numBuckets": "7",
+            "spark.sql.shuffle.partitions": "5",
+        }
+    )
+    st = StateStore(types.SimpleNamespace(conf=conf), None, str(tmp_path))
+    assert st._num_buckets() == 7
+    assert conf.reads == ["spark.kamu.state.numBuckets"]
+
+    for unset_or_bad in (None, "many"):
+        conf.values["spark.kamu.state.numBuckets"] = unset_or_bad
+        conf.reads.clear()
+        assert st._num_buckets() == 5
+        assert conf.reads == [
+            "spark.kamu.state.numBuckets",
+            "spark.sql.shuffle.partitions",
+        ]

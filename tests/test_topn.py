@@ -9,10 +9,11 @@ from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from kamu_engine_flink_spark.protocol.model import DatasetVocabulary
 
-from .helpers import TransformRunner, ts, write_input_slice
+from .helpers import TransformRunner, arrow_batch_size, ts, write_input_slice
 
 TOPN_QUERY = """select
   cast(now() as timestamp(3)) as placed_at,
@@ -122,6 +123,62 @@ def test_topn_changelog(spark, tmp_path):
         "player_name",
         "score",
     ]
+
+
+@pytest.mark.parametrize("batch", [None, 7], ids=["default", "batch7"])
+def test_topn_randomized_vs_simulation(spark, tmp_path, batch):
+    """Random rows through the global fold (one constant-key group), then
+    a resume slice, must produce exactly the changelog of a driver-side
+    running top-N. A 7-row Arrow batch makes the single group span many
+    batches, which the fold's carry must keep whole."""
+    import random
+
+    from kamu_engine_flink_spark.operators.topn import fold_records
+
+    rng = random.Random(11)
+    ranking: list = []
+
+    def slice_rows(first, n, day):
+        return [
+            (i, 0, ts(day), ts(1, 0, 0), f"p{i}", rng.randrange(100_000))
+            for i in range(first, first + n)
+        ]
+
+    def simulate(rows):
+        expected = []
+        for seq, _op, _st, _et, player, score in rows:
+            row = {"match_time": ts(1, 0, 0), "player_name": player,
+                   "score": score}
+            for _gseq, _sub, op, place, r in fold_records(
+                ranking, [(row, seq)], [("score", True)], 2
+            ):
+                expected.append((op, place, r["player_name"], r["score"]))
+        return expected
+
+    runner = TransformRunner(
+        spark,
+        tmp_path,
+        queries=[(TOPN_QUERY, None)],
+        vocab=DatasetVocabulary(event_time_column="placed_at"),
+    )
+    with arrow_batch_size(spark, batch):
+        for name, rows, day in (
+            ("s1", slice_rows(0, 400, 5), 6),
+            ("s2", slice_rows(400, 300, 6), 7),
+        ):
+            path = str(tmp_path / "in" / f"{name}.parquet")
+            match_scores_slice(path, rows)
+            resp, out = runner.run(
+                [{"alias": "match_scores", "data_paths": [path],
+                  "schema_file": path, "watermark": ts(1, 0, 1),
+                  "vocab": DatasetVocabulary(event_time_column="match_time")}],
+                system_time=ts(day),
+            )
+            got = [
+                (r["op"], r["place"], r["player_name"], r["score"])
+                for r in pq.read_table(out).to_pylist()
+            ]
+            assert got == simulate(rows), name
 
 
 def test_partition_prune_keeps_all_global_enterers(spark):
